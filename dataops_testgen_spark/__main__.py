@@ -65,10 +65,7 @@ def _profile_all(spark, tables, run_date, approx=False, sample=False):
 
     prof = profile_tables(tables, run_date=run_date, approx=approx,
                           sample=sample)
-    # checkpointed: the screen's class branches plus the Correlation/
-    # Dependence eligibility collects would otherwise each re-execute
-    # the inference cascade's expression DAG
-    return apply_inference(prof).localCheckpoint(eager=False)
+    return apply_inference(prof)
 
 
 def _profile_incremental(spark, tables, args):
@@ -171,18 +168,26 @@ def cmd_run_profile(args) -> int:
     else:
         inferred = _profile_all(spark, tables, args.run_date,
                                 approx=args.approx, sample=args.sample)
-    anomalies = None
     if args.store or args.notify_out:
-        from dataops_testgen_spark.anomalies import screen_anomalies
+        _screen_and_record(spark, args, inferred, tables)
+    _write(inferred, args.out, "profile_results")
+    return 0
 
-        # screened once and checkpointed: the Correlation/Dependence
-        # classes re-scan raw data per evaluation, so feeding the same
-        # relation to both the store write and the notification event
-        # would otherwise double that cost
-        anomalies = screen_anomalies(
-            inferred, tables=tables,
-            spearman=getattr(args, "spearman", False),
-        ).localCheckpoint(eager=False)
+
+def _screen_and_record(spark, args, inferred, tables):
+    """Hygiene screen over ``inferred``, stored as a profile run with
+    --store and sent as a profiling-run event with --notify-out; returns
+    the anomalies."""
+    from dataops_testgen_spark.anomalies import screen_anomalies
+    from dataops_testgen_spark.session import materialize
+
+    # tables= runs the Correlation class (Correlated_Columns, 34th rule)
+    # alongside the profile-driven classes — one fused agg per table.
+    # Cut because several consumers follow (store write, notify event,
+    # --out write, rollup join) and each would otherwise re-run the
+    # raw-table correlation/dependence/spearman scans.
+    anomalies = materialize(screen_anomalies(
+        inferred, tables=tables, spearman=getattr(args, "spearman", False)))
     if args.store:
         store = _store(spark, args)
         run_id = store.record_profile_run(
@@ -199,43 +204,17 @@ def cmd_run_profile(args) -> int:
         with open(args.notify_out, "a") as fh:
             fh.write(json.dumps(event) + "\n")
         print(f"notifications: 1 event -> {args.notify_out}")
-    _write(inferred, args.out, "profile_results")
-    return 0
+    return anomalies
 
 
 def cmd_run_anomalies(args) -> int:
-    from dataops_testgen_spark.anomalies import screen_anomalies
     from dataops_testgen_spark.scoring import rollup_scores
 
     spark = _spark()
     tables = _load_tables(spark, args.data_dir)
     inferred = _profile_all(spark, tables, args.run_date,
                             approx=args.approx, sample=args.sample)
-    # tables= runs the Correlation class (Correlated_Columns, 34th rule)
-    # alongside the profile-driven classes — one fused agg per table;
-    # checkpointed because up to four consumers follow (store write,
-    # notify event, --out write, rollup join) and each would otherwise
-    # re-run the raw-table correlation/dependence/spearman scans
-    anomalies = screen_anomalies(
-        inferred, tables=tables,
-        spearman=getattr(args, "spearman", False),
-    ).localCheckpoint(eager=False)
-    if args.store:
-        store = _store(spark, args)
-        run_id = store.record_profile_run(
-            inferred, anomalies,
-            table_group_id=args.table_group or "default",
-            run_date=args.run_date)
-        print(f"profile_run_id: {run_id}")
-    if args.notify_out:
-        from dataops_testgen_spark.notifications import (
-            build_profiling_run_event)
-
-        event = build_profiling_run_event(
-            anomalies, table_group=args.table_group or "default")
-        with open(args.notify_out, "a") as fh:
-            fh.write(json.dumps(event) + "\n")
-        print(f"notifications: 1 event -> {args.notify_out}")
+    anomalies = _screen_and_record(spark, args, inferred, tables)
     _write(anomalies, args.out, "profile_anomaly_results")
     detail = anomalies.join(
         inferred.select("table_name", "column_name", "record_ct"),
@@ -337,11 +316,12 @@ def cmd_run_tests(args) -> int:
         # param gate).
         from dataops_testgen_spark.inference.fk_discovery import (
             sync_fk_monitors)
+        from dataops_testgen_spark.session import materialize
 
         gen, fk_changes = sync_fk_monitors(tables, inferred, gen,
                                            run_date=args.run_date)
         if fk_changes["deactivated"] or fk_changes["added"]:
-            gen = gen.localCheckpoint(eager=False)   # consumed 2x below
+            gen = materialize(gen)   # consumed 2x below
             print(f"fk monitor sync: {fk_changes['deactivated']} "
                   f"deactivated, {fk_changes['added']} added")
             store.record_test_generation(gen, test_suite_key=args.test_suite,
@@ -1106,6 +1086,7 @@ def cmd_discover_fks(args) -> int:
     reference's ID-FK inference links keys only by shared column name —
     this verb finds the renamed ones. Informational: always exit 0."""
     from dataops_testgen_spark.inference.fk_discovery import fk_discovery
+    from dataops_testgen_spark.session import materialize
 
     spark = _spark()
     tables = _load_tables(spark, args.data_dir)
@@ -1117,10 +1098,10 @@ def cmd_discover_fks(args) -> int:
     if out is None:
         print("no candidate pairs survive profile pruning")
         return 0
-    # checkpointed: the collect below plus --out/--emit-tests/--store all
-    # consume this relation — without it each action re-runs every
-    # candidate pair's dictionary join
-    out = out.localCheckpoint(eager=False)
+    # cut: the collect below plus --out/--emit-tests/--store all consume
+    # this relation — without it each action re-runs every candidate
+    # pair's dictionary join
+    out = materialize(out)
     rows = sorted(out.collect(),
                   key=lambda r: (r["child_table"], r["child_column"],
                                  r["parent_table"], r["parent_column"]))
@@ -1665,6 +1646,7 @@ def cmd_corpus_dedup(args) -> int:
     from dataops_testgen_spark.pipeline.dedup import (dedup_keep_one,
                                                       exact_duplicates,
                                                       verified_near_dups)
+    from dataops_testgen_spark.session import materialize
 
     spark = _spark()
     docs = spark.read.parquet(args.corpus)
@@ -1673,9 +1655,9 @@ def cmd_corpus_dedup(args) -> int:
         groups = exact_duplicates(docs, text_col=args.text_col,
                                   id_col=args.id_col)
         # each group's doc_ids are sorted; drop everything after the head
-        drop = (groups.select(F.explode(F.expr(
-            "slice(doc_ids, 2, size(doc_ids) - 1)")).alias("__drop_id__"))
-            .localCheckpoint())
+        drop = materialize(groups.select(F.explode(F.expr(
+            "slice(doc_ids, 2, size(doc_ids) - 1)")).alias("__drop_id__")),
+            eager=True)
         kept = docs.join(F.broadcast(drop) if drop.count() * 32
                          <= 256 * 1024 * 1024 else drop,
                          docs[args.id_col] == F.col("__drop_id__"),

@@ -20,6 +20,8 @@ from itertools import combinations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dataops_testgen_spark.session import materialize
+
 CONTINGENCY_MAX_VALUES = 20
 
 RULE_COLUMNS = ["table_name", "cause_column_name", "cause_column_value",
@@ -63,7 +65,7 @@ def mine_contingency_rules(df: DataFrame, table_name: str, columns: list[str],
     pairs = pair_dfs[0]
     for p in pair_dfs[1:]:
         pairs = pairs.unionByName(p)
-    pairs = pairs.localCheckpoint(eager=False)  # reused 3× below
+    pairs = materialize(pairs)  # reused 3× below
 
     # per-(pair, side) totals — SUM over the pair counts, as the reference's
     # overall_counts does (groupby col sum freq_ct)

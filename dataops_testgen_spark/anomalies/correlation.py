@@ -41,6 +41,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from dataops_testgen_spark.session import materialize, session_memo
+
 CORRELATED_COLUMNS_TYPE = "Correlated_Columns"
 CORRELATION_LIKELIHOOD = "Possible"
 CORRELATION_RISK = 0.33
@@ -135,10 +137,10 @@ def _rank_dictionary(out: DataFrame, cols: list[str]) -> DataFrame:
     long = (out.select(
         F.expr(f"stack({len(cols)}, {melt})").alias("__c", "__v"))
         .filter(F.col("__v").isNotNull()))
-    vals = (long.groupBy("__c", "__v").agg(F.count(F.lit(1)).alias("__n"))
-            .repartitionByRange(F.col("__c"), F.col("__v"))
-            .withColumn("__pid", F.spark_partition_id())
-            .localCheckpoint(eager=False))
+    vals = materialize(
+        long.groupBy("__c", "__v").agg(F.count(F.lit(1)).alias("__n"))
+        .repartitionByRange(F.col("__c"), F.col("__v"))
+        .withColumn("__pid", F.spark_partition_id()))
     w_local = (Window.partitionBy("__pid", "__c").orderBy("__v")
                .rowsBetween(Window.unboundedPreceding, -1))
     local = F.coalesce(F.sum("__n").over(w_local), F.lit(0))
@@ -162,8 +164,8 @@ def _rank_transform_long(out: DataFrame, cols: list[str]) -> DataFrame:
     extra cost is shuffling the N x K long relation once for the pivot,
     which is why narrow tables keep the per-column join-back."""
     # pin row ids: the melt and the all-NULL-row spine both consume them
-    base = (out.withColumn("__rid", F.monotonically_increasing_id())
-            .localCheckpoint(eager=False))
+    base = materialize(
+        out.withColumn("__rid", F.monotonically_increasing_id()))
     melt = ", ".join(f"'{c}', `{c}`" for c in cols)
     long = (base.select(
         "__rid",
@@ -254,12 +256,9 @@ def correlation_screen(df: DataFrame, cols: list[str] | None = None,
 
     # the fused exprs depend only on the column-name list — cached per
     # session so the cascade's Pearson and rank passes (and every bench
-    # rerun) share one build (inference/helpers.cached_expr discipline)
-    from dataops_testgen_spark.inference import helpers as H
-
-    aggs, entries = H.cached_expr(
-        df.sparkSession.sparkContext.applicationId,
-        f"corr_screen_aggs:{','.join(cols)}", build)
+    # rerun) share one build
+    aggs, entries = session_memo(
+        df.sparkSession, ("corr_screen_aggs", tuple(cols)), build)
     one = df.agg(*aggs)
     out = (one.select(F.explode(F.array(*entries)).alias("p"))
            .select("p.col_a", "p.col_b", "p.n", "p.corr"))
@@ -422,7 +421,7 @@ def correlation_anomalies(tables: dict[str, DataFrame],
             # the pearson relation feeds both its own flag rows and the
             # anti-join below; model-sized (K² rows), so checkpointing
             # avoids running the fused agg twice
-            scr = scr.localCheckpoint(eager=False)
+            scr = materialize(scr)
         rows = scr.filter("flagged").select(
             F.lit(t).alias("table_name"),
             F.col("col_b").alias("column_name"),

@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dataops_testgen_spark.session import materialize
+
 DEPENDENT_COLUMN_TYPE = "Dependent_Column"
 DEPENDENCE_LIKELIHOOD = "Possible"
 DEPENDENCE_RISK = 0.33
@@ -88,9 +90,8 @@ def group_dependence_screen(df: DataFrame, cat_cols: list[str],
         # checkpointed: the group relation (<= the category's distinct
         # count rows) feeds BOTH folds below — without it each fold
         # re-runs the table scan
-        grouped = (df.filter(F.col(cat).isNotNull())
-                   .groupBy(F.col(cat)).agg(*aggs)
-                   .localCheckpoint(eager=False))
+        grouped = materialize(df.filter(F.col(cat).isNotNull())
+                              .groupBy(F.col(cat)).agg(*aggs))
         tot_aggs = []
         for i in range(len(num_cols)):
             nd = F.col(f"n{i}").cast("double")

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from dataops_testgen_spark.session import materialize
+
 FK_MIN_CONTAINMENT = 0.99
 
 _PROFILE_FIELDS = ["table_name", "column_name", "general_type",
@@ -176,7 +178,7 @@ def fk_discovery(tables: dict[str, DataFrame], inferred_profile: DataFrame,
             if (t, c) not in dicts:
                 d = _dictionary(tables, t, c)
                 if refs.get((t, c), 0) > 1:
-                    d = d.localCheckpoint(eager=False)
+                    d = materialize(d)
                 dicts[(t, c)] = d
     # Verify all pairs sharing a parent in ONE join: union the tagged
     # child dictionaries (grouped by the child value's Spark type so

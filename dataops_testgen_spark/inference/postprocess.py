@@ -18,7 +18,7 @@ from dataops_testgen_spark.inference.functional_type import (
     infer_table_types,
 )
 from dataops_testgen_spark.inference.pii import flag_pii
-from dataops_testgen_spark.session import is_leaf_relation
+from dataops_testgen_spark.session import materialize as _materialize
 
 
 def apply_inference(
@@ -28,7 +28,7 @@ def apply_inference(
     sk_mask: str = "%_sk",
     materialize: bool = True,
 ) -> DataFrame:
-    if materialize and not is_leaf_relation(profile):
+    if materialize:
         # The cascade's first checkpointed chunk (layers 1-5) otherwise
         # embeds the whole profile aggregation subtree in its analyzed
         # tree: Catalyst re-walks the fused ~60-metric agg on every
@@ -36,7 +36,7 @@ def apply_inference(
         # per column — cut it to a leaf first (same lineage-truncation
         # rationale as the merge-path checkpoint; measured ~2 s per
         # fresh-table screen seat, OPTIMIZATION_r13.md #14).
-        profile = profile.localCheckpoint(eager=False)
+        profile = _materialize(profile)
     df = add_datatype_suggestion(profile)
     df = infer_functional_datatypes(df, id_mask=id_mask, sk_mask=sk_mask)
     table_types = infer_table_types(df, history=history)
@@ -50,5 +50,5 @@ def apply_inference(
         # downstream action (anomaly screen branches, generation explode)
         # re-run Catalyst over those expression trees, which dominates wall
         # time. Cut the lineage once; the data itself is negligible.
-        df = df.localCheckpoint(eager=False)
+        df = _materialize(df)
     return df

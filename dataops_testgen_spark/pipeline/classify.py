@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataops_testgen_spark.pipeline.text import tokens
+from dataops_testgen_spark.session import materialize
 
 
 def nb_train(df: DataFrame, text_col: str = "text",
@@ -76,7 +77,7 @@ def nb_train(df: DataFrame, text_col: str = "text",
     # materialize the posting fold ONCE: vocab_ct and the cond relation
     # would otherwise each re-run the train explode+shuffle (model-sized
     # state — (label, term, c) rows over the capped vocabulary)
-    posting = posting.localCheckpoint()
+    posting = materialize(posting, eager=True)
     vocab_ct = posting.select("term").distinct().count()
     # per-label token mass over the (possibly capped) vocabulary
     totals = posting.groupBy("label").agg(F.sum("c").alias("t"))
@@ -87,8 +88,9 @@ def nb_train(df: DataFrame, text_col: str = "text",
                           / denom).alias("log_cond")))
     # one scan for the priors: per-label doc counts, n_docs = their sum
     # (was a dedicated df.count() job + a second scan for the groupBy)
-    label_counts = (df.groupBy(F.col(label_col).alias("label"))
-                    .agg(F.count(F.lit(1)).alias("n")).localCheckpoint())
+    label_counts = materialize(
+        df.groupBy(F.col(label_col).alias("label"))
+        .agg(F.count(F.lit(1)).alias("n")), eager=True)
     n_docs = label_counts.agg(F.sum("n")).first()[0] or 0
     if n_docs == 0:
         raise ValueError("training DataFrame is empty")
@@ -231,10 +233,10 @@ def lr_train(feats: DataFrame, labels: DataFrame, n_iters: int = 10,
     # NULL labels are dropped, not trained on: a NULL y would silently
     # skew every step (its residual falls out of the gradient sum while
     # its pq still inflates the Hessian and n_train)
-    base = (feats.join(labels.select("id", F.col("y").cast("double")
-                                     .alias("y"))
-                  .filter(F.col("y").isNotNull()), "id")
-            .repartition("id")).localCheckpoint()
+    base = materialize(
+        feats.join(labels.select("id", F.col("y").cast("double").alias("y"))
+                   .filter(F.col("y").isNotNull()), "id")
+        .repartition("id"), eager=True)
     try:
         n_train = base.select("id").distinct().count()
         if n_train == 0:

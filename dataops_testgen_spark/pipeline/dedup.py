@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataops_testgen_spark.pipeline.text import shingles
+from dataops_testgen_spark.session import materialize
 
 
 def exact_duplicates(df: DataFrame, text_col: str = "text",
@@ -192,7 +193,7 @@ def minhash_index_append(df: DataFrame, index_dir: str,
     # re-run the whole text->shingle->minhash aggregation (a second full
     # scan of the batch text). Signatures are O(batch docs x num_hashes)
     # hashes — bounded per-batch state, not corpus bytes.
-    sig = sig.localCheckpoint()
+    sig = materialize(sig, eager=True)
     banded = _bands_of(sig, num_hashes, bands)
     # resolve the id once (from signatures) so both relations stamp alike
     used = stamped_append(sig, posixpath.join(index_dir, "signatures"),
@@ -229,7 +230,7 @@ def minhash_index_probe(df: DataFrame, index_dir: str,
     # band build, the within-batch join side AND the estimate join — five
     # scans of the batch text without this (measured plan). Batch-bounded
     # state, same rationale as the append side.
-    sig_new = sig_new.localCheckpoint()
+    sig_new = materialize(sig_new, eager=True)
     banded_new = _bands_of(sig_new, num_hashes, bands)
     bands_path = posixpath.join(index_dir, "bands")
     sig_path = posixpath.join(index_dir, "signatures")
@@ -671,8 +672,8 @@ def simhash_pairs(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     # otherwise re-derive the whole shingle->md5->vote pipeline for BOTH
     # sides (2x the corpus scan — measured ~5s -> ~2.5s on sf0.1). 16
     # bytes/doc, same tradeoff as the edge list in duplicate_clusters.
-    sig = simhash_signatures(df, text_col, id_col, k, bits) \
-        .localCheckpoint(eager=True)
+    sig = materialize(simhash_signatures(df, text_col, id_col, k, bits),
+                      eager=True)
     num_blocks = max_hamming + 1
     if num_blocks > bits:
         raise ValueError(f"max_hamming={max_hamming} needs {num_blocks} blocks "
@@ -820,25 +821,26 @@ def duplicate_clusters(pairs: DataFrame, id_a: str = "id_a",
     # checkpoint the symmetric edge list FIRST: every propagation round
     # joins against it, and an unbroken lineage would re-derive the pair
     # source (e.g. the whole MinHash shingle/band pipeline) once per round
-    edges = (pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-             .union(pairs.select(F.col(id_b).alias("src"),
-                                 F.col(id_a).alias("dst")))
-             .localCheckpoint())
-    labels = (edges.select(F.col("src").alias("id")).distinct()
-              .withColumn("label", F.col("id"))
-              .localCheckpoint())
+    edges = materialize(
+        pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+        .union(pairs.select(F.col(id_b).alias("src"),
+                            F.col(id_a).alias("dst"))), eager=True)
+    labels = materialize(
+        edges.select(F.col("src").alias("id")).distinct()
+        .withColumn("label", F.col("id")), eager=True)
     prev_sum = labels.agg(F.sum("label")).collect()[0][0]
     converged = False
     for _ in range(max_iterations):
         nbr_min = (edges.join(labels, edges["src"] == labels["id"])
                    .groupBy(edges["dst"].alias("nid"))
                    .agg(F.min("label").alias("nbr_label")))
-        labels = (labels.join(nbr_min, labels["id"] == nbr_min["nid"], "left")
-                  .select(labels["id"],
-                          F.least(labels["label"],
-                                  F.coalesce(F.col("nbr_label"),
-                                             labels["label"])).alias("label"))
-                  .localCheckpoint())
+        labels = materialize(
+            labels.join(nbr_min, labels["id"] == nbr_min["nid"], "left")
+            .select(labels["id"],
+                    F.least(labels["label"],
+                            F.coalesce(F.col("nbr_label"),
+                                       labels["label"])).alias("label")),
+            eager=True)
         cur_sum = labels.agg(F.sum("label")).collect()[0][0]
         if cur_sum == prev_sum:
             converged = True
@@ -879,9 +881,9 @@ def dedup_keep_one(df: DataFrame, pairs: DataFrame,
     frontier, not the corpus.
     """
     clusters = duplicate_clusters(pairs)
-    drop = (clusters.filter(F.col("doc_id") != F.col("cluster_id"))
-            .select(F.col("doc_id").alias("__drop_id__"))
-            .localCheckpoint())
+    drop = materialize(
+        clusters.filter(F.col("doc_id") != F.col("cluster_id"))
+        .select(F.col("doc_id").alias("__drop_id__")), eager=True)
     if drop.count() * 32 <= broadcast_max_bytes:
         drop = F.broadcast(drop)
     return df.join(drop, df[id_col] == F.col("__drop_id__"), "left_anti")

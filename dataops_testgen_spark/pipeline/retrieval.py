@@ -25,6 +25,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from dataops_testgen_spark.pipeline.text import tokens
+from dataops_testgen_spark.session import materialize
 
 
 def bm25_topk(df: DataFrame, queries: DataFrame, k: int = 10,
@@ -165,8 +166,9 @@ def lexical_index_append(df: DataFrame, index_dir: str,
     # otherwise re-run the full text explode+shuffle that the postings
     # write runs (two corpus passes per append). tf is exactly the
     # postings being persisted — batch-bounded state.
-    tf = (toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf"))
-          .localCheckpoint())
+    tf = materialize(
+        toks.groupBy("id", "term").agg(F.count(F.lit(1)).alias("tf")),
+        eager=True)
     dl = tf.groupBy("id").agg(F.sum("tf").alias("dl"))
     # resolve the id once (from doclen, the small relation) so both
     # relations stamp alike

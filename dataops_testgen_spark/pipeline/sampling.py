@@ -26,6 +26,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from dataops_testgen_spark.pipeline.text import tokens
+from dataops_testgen_spark.session import materialize
 
 # 2^32 buckets from the first 8 hex chars of md5 — available bit-for-bit
 # in every engine (Spark, DuckDB, warehouses), so a sample drawn here can
@@ -151,10 +152,10 @@ def dsir_logweights(corpus: DataFrame, target: DataFrame,
     # totals, the left join, the broadcast) from re-running the full
     # tokenize+hash lineage once per consumer; the corpus is scanned
     # exactly twice (bucket counts, then the weight join)
-    c_counts = corpus_feats.groupBy("bucket").agg(
-        F.count("*").alias("c_ct")).localCheckpoint()
-    t_counts = target_feats.groupBy("bucket").agg(
-        F.count("*").alias("t_ct")).localCheckpoint()
+    c_counts = materialize(corpus_feats.groupBy("bucket").agg(
+        F.count("*").alias("c_ct")), eager=True)
+    t_counts = materialize(target_feats.groupBy("bucket").agg(
+        F.count("*").alias("t_ct")), eager=True)
     c_total = c_counts.agg(F.sum("c_ct").alias("c_total"))
     t_total = t_counts.agg(F.coalesce(F.sum("t_ct"), F.lit(0))
                            .alias("t_total"))

@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from dataops_testgen_spark.session import materialize
+
 
 def dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y),
@@ -1105,8 +1107,8 @@ def ann_index_probe(queries: DataFrame, index_dir: str, k: int = 10,
     kk = cb_rows[-1]["c"] + 1
     codebook = np.array([r["codeword"] for r in cb_rows]).reshape(m, kk, -1)
 
-    qcells = _assign_cells_pandas(queries, centroids, vec_col, id_col,
-                                  nprobe).localCheckpoint()
+    qcells = materialize(_assign_cells_pandas(queries, centroids, vec_col,
+                                              id_col, nprobe), eager=True)
     probed = sorted({c for r in qcells.select("cells").collect()
                      for c in r["cells"]})
     idx = (spark.read.parquet(posixpath.join(index_dir, "codes"))

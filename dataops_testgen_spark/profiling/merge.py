@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from dataops_testgen_spark.profiling.profiler import PROFILE_SCHEMA
+from dataops_testgen_spark.session import materialize, session_memo
 
 KEY_FIELDS = ["table_name", "column_name"]
 META_FIRST = ["ordinal_position", "column_type", "general_type", "is_decimal"]
@@ -213,18 +214,14 @@ def merge_profiles(profiles: DataFrame) -> DataFrame:
     slices × columns. See the module docstring for merge rules; output
     keeps the ``PROFILE_SCHEMA`` column order with non-mergeable metrics
     NULL."""
-    from dataops_testgen_spark.session import is_leaf_relation
-
-    if not is_leaf_relation(profiles):
-        # Materialize the slice profiles once: the sample-ratio guard just
-        # below is an action and the eager fold checkpoint at the end is
-        # another — a lazy input would run the WHOLE slice-profile
-        # computation twice per merge (at scale, a full extra pass over
-        # every newly profiled partition). The relation is slices×columns
-        # rows; the guard action below materializes the checkpoint, and
-        # the fold then plans over a leaf instead of the union of
-        # per-slice profile agg trees.
-        profiles = profiles.localCheckpoint(eager=False)
+    # Materialize the slice profiles once: the sample-ratio guard just
+    # below is an action and the eager fold checkpoint at the end is
+    # another — a lazy input would run the WHOLE slice-profile
+    # computation twice per merge (at scale, a full extra pass over
+    # every newly profiled partition). The relation is slices×columns
+    # rows; the fold then plans over a leaf instead of the union of
+    # per-slice profile agg trees.
+    profiles = materialize(profiles)
     if profiles.filter(F.coalesce(F.col("sample_ratio"), F.lit(1.0))
                        < 1.0).limit(1).count():
         raise ValueError(
@@ -308,15 +305,12 @@ def merge_profiles(profiles: DataFrame) -> DataFrame:
 
     # The agg expression list depends only on which sketch columns are
     # present (never on the table), so the ~120 Column objects are built
-    # once per (session, signature) instead of per merge call — the
-    # cascade/profiler cached_expr discipline (inference/helpers.py).
-    from dataops_testgen_spark.inference.helpers import cached_expr
-
+    # once per (session, signature) instead of per merge call.
     sig = ",".join(c for c, present in (
         ("hll", has_sketches), ("q", has_qsketch), ("f", has_fsketch),
         ("s", has_ssketch), ("d", has_days), ("p", has_stdpat)) if present)
-    aggs = cached_expr(profiles.sparkSession.sparkContext.applicationId,
-                       f"merge_aggs:{sig}", _build_aggs)
+    aggs = session_memo(profiles.sparkSession, ("merge_aggs", sig),
+                        _build_aggs)
     g = profiles.groupBy(*KEY_FIELDS).agg(*aggs)
     if has_qsketch:
         g = g.withColumn("__q__", _merge_quantile_sketches_udf()(F.col("__qsk__"))) \
@@ -466,4 +460,4 @@ def merge_profiles(profiles: DataFrame) -> DataFrame:
     # all: measured 13 s vs ~3 s of Catalyst analysis on a merged vs leaf
     # profile) would re-analyze and re-run that tree per action without
     # this. The checkpoint job itself folds slices x columns rows.
-    return g.select(*out_cols).localCheckpoint()
+    return materialize(g.select(*out_cols), eager=True)

@@ -30,6 +30,7 @@ from dataops_testgen_spark import schema_scan
 from dataops_testgen_spark.profiling import expressions as X
 from dataops_testgen_spark.profiling import regexes as RX
 from dataops_testgen_spark.profiling.secondary import secondary_profile
+from dataops_testgen_spark.session import materialize, session_memo
 
 # Metrics scaled by 1/sample_ratio when sampling (count-like). Distinct counts
 # intentionally NOT scaled (project_update_profile_results_to_estimates.sql).
@@ -182,32 +183,21 @@ def _column_exprs(col: schema_scan.ColumnChars, idx: int, run_date: _dt.date,
             for name, expr in metrics.items()]
 
 
-# (app_id, column signature, slot, run_date, mode) -> (alias, Column) list.
-# A profile plan is ~60 metrics × columns of py4j Column trees; assembling
-# one is thousands of driver round-trips (~1-2 s for a wide table) repeated
-# IDENTICALLY for every same-shaped table/slice in a session — the
-# incremental-profiling and monitor paths profile the same shape every
-# cycle. Columns are unbound to any DataFrame, so reuse is safe; keying on
-# the applicationId drops entries from a stopped session's dead gateway.
-_EXPR_CACHE: dict[tuple, list] = {}
-
-
-def _column_exprs_cached(app_id: str, col: schema_scan.ColumnChars, idx: int,
-                         run_date: _dt.date, distinct: str,
+def _column_exprs_cached(spark: SparkSession, col: schema_scan.ColumnChars,
+                         idx: int, run_date: _dt.date, distinct: str,
                          exact_percentiles: bool):
-    key = (app_id, col.column_name, col.column_type, col.general_type,
-           col.is_decimal, idx, run_date.toordinal(), distinct,
-           exact_percentiles)
-    got = _EXPR_CACHE.get(key)
-    if got is None:
-        # evict entries from stopped sessions (dead py4j gateways): a
-        # long-lived process spanning many Spark sessions would otherwise
-        # accumulate unreachable Column handles without bound
-        for stale in [k for k in _EXPR_CACHE if k[0] != app_id]:
-            del _EXPR_CACHE[stale]
-        got = _column_exprs(col, idx, run_date, distinct, exact_percentiles)
-        _EXPR_CACHE[key] = got
-    return got
+    """``_column_exprs`` memoized per session on (column signature, slot,
+    run_date, mode). A profile plan is ~60 metrics × columns of py4j
+    Column trees; assembling one is thousands of driver round-trips (~1-2 s
+    for a wide table) repeated IDENTICALLY for every same-shaped
+    table/slice in a session — the incremental-profiling and monitor paths
+    profile the same shape every cycle. Columns are unbound to any
+    DataFrame, so reuse is safe."""
+    key = ("column_exprs", col.column_name, col.column_type,
+           col.general_type, col.is_decimal, idx, run_date.toordinal(),
+           distinct, exact_percentiles)
+    return session_memo(spark, key, lambda: _column_exprs(
+        col, idx, run_date, distinct, exact_percentiles))
 
 
 def _classify_std_pattern(vals: dict, value_ct: int) -> str | None:
@@ -414,10 +404,9 @@ def profile_table(
     # pure noise at scale.
     distinct = "approx" if approx else "exact"
 
-    app_id = spark.sparkContext.applicationId
     exprs = []
     for i, col in enumerate(cols):
-        exprs.extend(_column_exprs_cached(app_id, col, i, run_date,
+        exprs.extend(_column_exprs_cached(spark, col, i, run_date,
                                           distinct, exact_percentiles))
     # TypedImperativeAggregates: keep sketches out of the codegen'd main agg
     sketch_exprs = [
@@ -455,7 +444,7 @@ def profile_table(
     def _run_secondary():
         s = secondary_profile(
             target, [c for c in cols if c.general_type == "A"], table_name)
-        sec_holder["df"] = None if s is None else s.localCheckpoint()
+        sec_holder["df"] = None if s is None else materialize(s, eager=True)
 
     # all holders key on (slice_key, column); slice_key is None outside
     # slice mode (and for the whole-table fold inside it there are no
@@ -586,10 +575,10 @@ def profile_table(
     if secondary:
         sec = sec_holder.get("df")
         if sec is not None:
-            # sec is already localCheckpoint'ed (materialized in the thread
-            # pool above), so this join carries no table-scan lineage —
-            # downstream consumers (inference self-joins, anomaly screening
-            # branches) never re-run the unpivot scan.
+            # sec is already materialized (in the thread pool above), so
+            # this join carries no table-scan lineage — downstream
+            # consumers (inference self-joins, anomaly screening branches)
+            # never re-run the unpivot scan.
             profile = (
                 profile.drop("top_patterns", "distinct_pattern_ct",
                              "top_freq_values", "distinct_value_hash")

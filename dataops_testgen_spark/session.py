@@ -1,4 +1,6 @@
-"""SparkSession factory tuned for this engine.
+"""SparkSession factory tuned for this engine, and the two session-scoped
+primitives every stage uses: ``materialize`` (the one lineage cut) and
+``session_memo`` (the one per-session memo).
 
 Defaults target local[N] testing but the settings are the ones that matter on
 a real cluster too: AQE on (runtime re-plan, skew-join handling, partition
@@ -9,8 +11,16 @@ metrics are deterministic.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
+
+
+def _default_driver_memory() -> str:
+    """Half of physical memory, capped at 24g: the local driver JVM also
+    hosts the executors, and the Python workers need the rest."""
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return f"{max(1, min(24, int(ram_gb // 2)))}g"
 
 
 def get_spark(app_name: str = "dataops_testgen_spark", shuffle_partitions: int | None = None) -> SparkSession:
@@ -23,7 +33,8 @@ def get_spark(app_name: str = "dataops_testgen_spark", shuffle_partitions: int |
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "24g"))
+        .config("spark.driver.memory",
+                os.environ.get("SPARK_DRIVER_MEMORY") or _default_driver_memory())
         # The engine's plans are codegen-heavy (a table profile alone emits
         # dozens of generated classes); with the JVM's default 240 MB
         # reserved code cache a long session can fill it, at which point
@@ -65,18 +76,58 @@ def get_spark(app_name: str = "dataops_testgen_spark", shuffle_partitions: int |
     return spark
 
 
-def is_leaf_relation(df) -> bool:
-    """True when the DataFrame's plan is already a materialized leaf (a
-    prior localCheckpoint, a bare relation scan, or driver-local rows) —
-    re-checkpointing those only copies the data for no lineage gain.
-    LocalRelation (createDataFrame inputs) and DataSourceV2Relation (the
-    V2 reader's scan) are leaves too (judge ADVICE r13)."""
+# Plans that are already a materialized leaf: a prior checkpoint, a bare
+# relation scan, driver-local rows, the V2 reader's scan. Cutting lineage
+# there only copies the data.
+_LEAVES = ("LogicalRDD", "LogicalRelation", "LocalRelation",
+           "DataSourceV2Relation")
+
+
+def _is_leaf(df) -> bool:
     try:
         name = df._jdf.queryExecution().logical().getClass().getSimpleName()
     except Exception:
         return False
-    return name in ("LogicalRDD", "LogicalRelation", "LocalRelation",
-                    "DataSourceV2Relation")
+    return name in _LEAVES
+
+
+def materialize(df, eager: bool = False):
+    """Cut ``df``'s lineage: the engine's one hand-off between stages.
+
+    Returns ``df`` unchanged when its plan is already a leaf, else
+    ``df.localCheckpoint(eager=eager)``. Callers say only *where* a cut
+    pays (an intermediate consumed several times, or a deep plan that
+    later stages would re-analyze); ``eager=True`` runs the job now.
+    """
+    if _is_leaf(df):
+        return df
+    return df.localCheckpoint(eager=eager)
+
+
+# (applicationId, key) -> value. Entries hold py4j handles (Columns,
+# DataFrames) that die with their session, so keying on the application
+# id keeps a restarted session from reusing them.
+_MEMO: dict[tuple, object] = {}
+_MEMO_LOCK = threading.Lock()
+
+
+def session_memo(spark: SparkSession, key, build):
+    """``build()``'s value, computed once per (Spark application, key).
+
+    A miss evicts every other application's entries. The lock covers only
+    lookup, insert and evict: ``build`` runs outside it, so builds may run
+    concurrently from a thread pool and may themselves read the memo. On a
+    same-key race the first value inserted wins.
+    """
+    k = (spark.sparkContext.applicationId, key)
+    with _MEMO_LOCK:
+        if k in _MEMO:
+            return _MEMO[k]
+    got = build()
+    with _MEMO_LOCK:
+        for stale in [x for x in _MEMO if x[0] != k[0]]:
+            del _MEMO[stale]
+        return _MEMO.setdefault(k, got)
 
 
 def ensure_parallelism(df, min_partitions: int | None = None):

@@ -63,6 +63,19 @@ def _parallel_plan(items, nworkers):
     return [b[1] for b in bins if b[1]]
 
 
+def _worker_sizing():
+    """(workers, cores each, heap GB each) from this host's cores and
+    physical memory. Each worker is one Spark driver JVM plus its Python
+    workers; the JVM heaps together get at most half of physical memory,
+    leaving the rest for JVM overhead and the Python processes."""
+    cpus = len(os.sched_getaffinity(0)) if hasattr(os, "sched_getaffinity") \
+        else (os.cpu_count() or 4)
+    ram_gb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    nworkers = max(1, min(5, cpus // 2, int(ram_gb // 6)))
+    heap_gb = max(1, min(10, int(ram_gb / 2 / nworkers)))
+    return nworkers, max(2, cpus // nworkers), heap_gb
+
+
 def pytest_runtestloop(session):
     if os.environ.get(_PAR_WORKER_ENV) or os.environ.get("TG_TESTS_SERIAL"):
         return None
@@ -71,9 +84,7 @@ def pytest_runtestloop(session):
             or getattr(config.option, "keyword", "")
             or len(session.items) < 200):
         return None
-    cpus = os.cpu_count() or 8
-    nworkers = max(2, min(5, cpus // 6))
-    worker_cpus = max(6, cpus // nworkers)
+    nworkers, worker_cpus, heap_gb = _worker_sizing()
     plan = _parallel_plan(session.items, nworkers)
     tw = config.pluginmanager.get_plugin("terminalreporter")
 
@@ -85,14 +96,15 @@ def pytest_runtestloop(session):
 
     say(f"parallel suite runner: {len(session.items)} tests, "
         f"{sum(len(p) for p in plan)} files -> {len(plan)} workers "
-        f"(local[{worker_cpus}] each); TG_TESTS_SERIAL=1 disables")
+        f"(local[{worker_cpus}], {heap_gb}g heap each); "
+        f"TG_TESTS_SERIAL=1 disables")
     t0 = time.time()
     procs = []
     for i, files in enumerate(plan):
         env = dict(os.environ)
         env[_PAR_WORKER_ENV] = str(i)
         env["SPARK_GRAFT_CPUS"] = str(worker_cpus)
-        env.setdefault("SPARK_DRIVER_MEMORY", "10g")
+        env.setdefault("SPARK_DRIVER_MEMORY", f"{heap_gb}g")
         cmd = [sys.executable, "-m", "pytest", "-q",
                f"--basetemp=/tmp/tg_par_tmp_{os.getpid()}_{i}"]
         if getattr(config.option, "exitfirst", False):
@@ -113,6 +125,10 @@ def pytest_runtestloop(session):
             npass = int(m_pass.group(1)) if m_pass else 0
             nfail = int(m_fail.group(1)) if m_fail else 0
             nerr = int(m_err.group(1)) if m_err else 0
+            if p.returncode != 0 and not (nfail or nerr):
+                # a worker that died (OOM-killed JVM, crash at teardown)
+                # can print green counts; its rc is the truth
+                nerr = 1
             total_passed += npass
             total_failed += nfail
             total_error += nerr

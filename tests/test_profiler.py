@@ -394,23 +394,28 @@ def test_expr_cache_reuse_same_shape(spark, sf_dir):
 
     from pyspark.sql import functions as F
 
+    from dataops_testgen_spark import session as S
     from dataops_testgen_spark.profiling import profiler as P
+
+    def column_entries():
+        return [k for k in S._MEMO if k[1][0] == "column_exprs"]
 
     df = spark.read.parquet(f"{sf_dir}/orders.parquet") \
         .select("o_orderkey", "o_totalprice", "o_orderstatus")
     rd = datetime.date(2026, 1, 1)
     app = spark.sparkContext.applicationId
-    P._EXPR_CACHE.clear()
+    for key in column_entries():
+        del S._MEMO[key]
     a = {r["column_name"]: r for r in
          P.profile_table(df, "orders", run_date=rd).collect()}
-    n_entries = len(P._EXPR_CACHE)
+    n_entries = len(column_entries())
     assert n_entries == 3  # one per column
     # same shape, different slice -> cache hits, no new entries
     b = {r["column_name"]: r for r in
          P.profile_table(df.filter(F.col("o_orderkey") % 2 == 0), "orders",
                          run_date=rd).collect()}
-    assert len(P._EXPR_CACHE) == n_entries
-    for key in P._EXPR_CACHE:
+    assert len(column_entries()) == n_entries
+    for key in column_entries():
         assert key[0] == app
     # results still correct: slice metrics differ but schema agrees
     assert set(a) == set(b)
@@ -418,7 +423,7 @@ def test_expr_cache_reuse_same_shape(spark, sf_dir):
     # a different run_date must NOT hit the same entries (date literals)
     P.profile_table(df, "orders", run_date=datetime.date(2026, 2, 2)) \
         .collect()
-    assert len(P._EXPR_CACHE) == 2 * n_entries
+    assert len(column_entries()) == 2 * n_entries
 
 
 def test_slice_col_single_pass_matches_filtered_slices(spark, sf_dir):
